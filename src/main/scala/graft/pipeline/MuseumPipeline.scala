@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ImageOps
@@ -13,10 +13,26 @@ import graft.operators.{Chunking, Relational}
   * (transform_load.py:34-43,62-70,116-119,135-142) become recompute +
   * overwrite, per SURVEY.md §7.4.
   *
+  * Two surfaces. [[run]] is the fused fresh-ingest path: the orchestrator
+  * runs each pass once, so `run` builds the fetch funnel once, keeps the
+  * first row per object once, and projects all five tables from that one
+  * kept frame — no victim blobs are written and then deleted, and no
+  * blob is chunked only to be reassembled. The step functions
+  * ([[ingest]], [[clean]], [[dedup]], [[deleteFiles]], [[transform]],
+  * [[split]]) are the re-run surface over stored tables (F4 idempotency
+  * lives in [[transform]]); chained in order they equal [[run]] on every
+  * column but the timestamps. Both surfaces share the fetch funnel, the
+  * P1 metadata projection and the transformed-blob projection.
+  *
   * Scale posture: no driver-side materialization anywhere (the reference
-  * does `list(find({}))` twice — transform_load.py:25,76); image bytes
-  * stay executor-side; joins are key-equi and Catalyst/AQE pick
-  * broadcast vs shuffle; dedup is one shuffle on `object_id`.
+  * does `list(find({}))` twice — transform_load.py:25,76), and building
+  * the frames launches no Spark job; image bytes stay executor-side. In
+  * [[run]] every output reads the image source once, keep-first runs on
+  * the L1 top-k (which arrives as one partition, so the window adds no
+  * shuffle), the kernel runs once per kept row, and the raw bytes go
+  * straight from the fetch into the GridFS chunk split. The steps add the anti-joins, the semi-join and
+  * the chunk reassembly (one shuffle on `files_id`) a re-run over stored
+  * tables needs.
   */
 object MuseumPipeline {
 
@@ -27,8 +43,81 @@ object MuseumPipeline {
   /** Deterministic 24-hex id in ObjectId format (X3). The reference uses
     * `str(ObjectId())` (ingestion.py:60); we derive from the business key
     * so re-runs and tests are reproducible. */
-  def hexId(seed: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def hexId(seed: Column): Column =
     substring(md5(seed.cast("string")), 1, 24)
+
+  /** F1–F3, F6, L1 and the derived ids: the fetched rows, one per
+    * ingested blob, with `gridfs_file_id`, the metadata `__meta_id` and
+    * `created_at` beside the API columns and the fetched `bytes`. */
+  private def fetch(objects: DataFrame, images: DataFrame, maxDownloads: Int): DataFrame = {
+    // The reference mints a fresh ObjectId per ingested row
+    // (ingestion.py:60); we derive from (objectID, primaryImage) so the
+    // id is deterministic yet distinct for duplicate objectIDs arriving
+    // via different URLs. The seed stays an expression, not a column:
+    // both ids reading a seed column would keep two projections under
+    // the limit, and Catalyst then plans the sort+limit as a global sort.
+    val seed = concat(col("objectID").cast("string"), lit("|"), col("primaryImage"))
+    objects
+      .filter(col("status") === 200)                                     // F1
+      .filter(length(trim(coalesce(col("primaryImage"), lit("")))) > 0)  // F2 (Python truthiness: "" excluded)
+      .join(images.filter(col("status") === 200),                        // F3 via inner join
+        col("primaryImage") === col("url"), "inner")
+      .filter(col("bytes").isNotNull)                                    // F6: failed download drops row
+      // L1: filter-then-limit. Ordered first: limit on an unordered frame
+      // picks an arbitrary subset (varies with partitioning/AQE), which
+      // would undercut the deterministic derived ids below. Catalyst plans
+      // sort+limit as TakeOrderedAndProject (per-partition top-k + merge),
+      // not a global sort. The reference's sequential loop is id-ordered
+      // too (ingestion.py:38).
+      .orderBy(col("objectID"), col("primaryImage"))
+      .limit(maxDownloads)
+      .withColumn("gridfs_file_id", hexId(seed))
+      .withColumn("__meta_id", hexId(concat(seed, lit("_meta"))))
+      .withColumn("created_at", current_timestamp())                     // X2
+  }
+
+  /** K1 input: the fetched blobs as `(_id, filename, data)`. */
+  private def rawBlobs(fetched: DataFrame): DataFrame = fetched.select(
+    col("gridfs_file_id").as("_id"),
+    concat(col("objectID").cast("string"), lit(".jpg")).as("filename"),   // X1 (ingestion.py:65)
+    col("bytes").as("data"))
+
+  /** P1 (ingestion.py:70-83): fetched rows → `artwork_metadata` rows with
+    * the given lineage and no split label yet. */
+  private def metadataOf(fetched: DataFrame, lineage: Column): DataFrame = fetched.select(
+    col("__meta_id").as("_id"),
+    col("__meta_id").as("doc_id"),
+    col("objectID").cast("long").as("object_id"),
+    col("title"),
+    col("artistDisplayName").as("artist"),
+    col("department"),
+    col("culture"),
+    col("period"),
+    col("objectDate").as("object_date"),
+    col("medium"),
+    lit("The MET Museum API").as("source"),                               // constant-folded literal
+    col("gridfs_file_id"),
+    col("created_at"),
+    lineage.as("transformed_gridfs_file_id"),
+    lit(null).cast("string").as("split"))
+
+  /** Id of an object's transformed blob. */
+  private def transformedId(objectId: Column): Column =
+    hexId(concat(objectId, lit("_transformed")))
+
+  /** I1–I4 + K5 input: `(_id, filename, data)` of the transformed blob of
+    * every row whose bytes decode (F6: the rest are dropped), plus `keep`.
+    * The kernel runs once per row. A plain `filter(isNotNull)` on its
+    * result would be pushed below the projection that computes it, with
+    * the call inlined — twice per row; a filter on a generator's output
+    * stays above the generator, so the one-element explode holds it. */
+  private def transformedBlobs(rows: DataFrame, objectId: Column, bytes: Column,
+                               keep: Column*): DataFrame =
+    rows.select(keep ++ Seq(
+      transformedId(objectId).as("_id"),
+      concat(objectId.cast("string"), lit("_transformed.jpg")).as("filename"), // transform_load.py:108
+      explode(array(ImageOps.transformImage(bytes))).as("data")): _*)
+      .filter(col("data").isNotNull)                                      // F6: undecodable ⇒ dropped
 
   /** E1 — ingest (ingestion.py:23-98).
     *
@@ -43,50 +132,9 @@ object MuseumPipeline {
     */
   def ingest(objects: DataFrame, images: DataFrame, maxDownloads: Int = 20)
       : (DataFrame, DataFrame, DataFrame) = {
-    val fetched = objects
-      .filter(col("status") === 200)                                     // F1
-      .filter(length(trim(coalesce(col("primaryImage"), lit("")))) > 0)  // F2 (Python truthiness: "" excluded)
-      .join(images.filter(col("status") === 200),                        // F3 via inner join
-        col("primaryImage") === col("url"), "inner")
-      .filter(col("bytes").isNotNull)                                    // F6: failed download drops row
-      // L1: filter-then-limit. Ordered first: limit on an unordered frame
-      // picks an arbitrary subset (varies with partitioning/AQE), which
-      // would undercut the deterministic derived ids below. Catalyst plans
-      // sort+limit as TakeOrderedAndProject (per-partition top-k + merge),
-      // not a global sort. The reference's sequential loop is id-ordered
-      // too (ingestion.py:38).
-      .orderBy(col("objectID"), col("primaryImage"))
-      .limit(maxDownloads)
-      // The reference mints a fresh ObjectId per ingested row
-      // (ingestion.py:60); we derive from (objectID, primaryImage) so the
-      // id is deterministic yet distinct for duplicate objectIDs arriving
-      // via different URLs.
-      .withColumn("__seed", concat(col("objectID").cast("string"), lit("|"), col("primaryImage")))
-      .withColumn("gridfs_file_id", hexId(col("__seed")))
-
-    val blobs = fetched.select(
-      col("gridfs_file_id").as("_id"),
-      concat(col("objectID").cast("string"), lit(".jpg")).as("filename"), // X1 (ingestion.py:65)
-      col("bytes").as("data"))
-    val (files, chunks) = Chunking.gridfsPut(blobs)                       // K1
-
-    val metadata = fetched.select(                                        // P1 (ingestion.py:70-83)
-      hexId(concat(col("__seed"), lit("_meta"))).as("_id"),
-      hexId(concat(col("__seed"), lit("_meta"))).as("doc_id"),
-      col("objectID").cast("long").as("object_id"),
-      col("title"),
-      col("artistDisplayName").as("artist"),
-      col("department"),
-      col("culture"),
-      col("period"),
-      col("objectDate").as("object_date"),
-      col("medium"),
-      lit("The MET Museum API").as("source"),                             // constant-folded literal
-      col("gridfs_file_id"),
-      current_timestamp().as("created_at"),                               // X2
-      lit(null).cast("string").as("transformed_gridfs_file_id"),
-      lit(null).cast("string").as("split"))
-    (metadata, files, chunks)                                             // K2: caller writes
+    val fetched = fetch(objects, images, maxDownloads)
+    val (files, chunks) = Chunking.gridfsPut(rawBlobs(fetched))           // K1
+    (metadataOf(fetched, lit(null).cast("string")), files, chunks)        // K2: caller writes
   }
 
   /** E2 pass 1 — C1 clean (transform_load.py:21-43): one vectorized
@@ -129,22 +177,16 @@ object MuseumPipeline {
       .filter(col("gridfs_file_id").isNotNull)                            // F5
 
     val blobs = Chunking.reassemble(chunks)                               // J2 + A3
-    val transformed = todo
+    val joined = todo
       .join(files.select(col("_id").as("__fid")),
         col("gridfs_file_id") === col("__fid"), "inner")                  // J1; dangling FK ⇒ dropped (F6)
       .join(blobs, col("gridfs_file_id") === col("files_id"), "inner")
-      .withColumn("tbytes", ImageOps.transformImage(col("data")))         // I1–I4
-      .filter(col("tbytes").isNotNull)                                    // F6: undecodable ⇒ dropped
-      .withColumn("t_id", hexId(concat(col("object_id"), lit("_transformed"))))
-
-    val tBlobs = transformed.select(
-      col("t_id").as("_id"),
-      concat(col("object_id").cast("string"), lit("_transformed.jpg")).as("filename"), // transform_load.py:108
-      col("tbytes").as("data"))
-    val (tFiles, tChunks) = Chunking.gridfsPut(tBlobs)                    // K5
+    val transformed = transformedBlobs(joined, col("object_id"), col("data"),
+      col("_id").as("__mid"))                                             // I1–I4
+    val (tFiles, tChunks) = Chunking.gridfsPut(transformed)              // K5
 
     val updated = metadata
-      .join(transformed.select(col("_id").as("__mid"), col("t_id")),
+      .join(transformed.select(col("__mid"), col("_id").as("t_id")),
         col("_id") === col("__mid"), "left_outer")                        // K6 as recompute
       .withColumn("transformed_gridfs_file_id",
         coalesce(col("transformed_gridfs_file_id"), col("t_id")))
@@ -158,20 +200,26 @@ object MuseumPipeline {
   def split(metadata: DataFrame): DataFrame =
     metadata.withColumn("split", Relational.splitLabel(col("object_id")))
 
-  /** Full E1→E2 orchestration (etl_museum_gridfs.py). Returns every final
-    * table keyed by the reference's collection names. */
+  /** Full E1→E2 orchestration of a fresh ingest (etl_museum_gridfs.py),
+    * fused: keep-first runs once on the fetched rows (the [[dedup]]
+    * order), and every table is a projection of the kept frame — the
+    * kept blobs go straight into the GridFS put, the kernel reads the
+    * kept bytes, and the lineage is the transformed id where the kernel
+    * decodes. Returns every final table keyed by the reference's
+    * collection names. */
   def run(spark: SparkSession, objects: DataFrame, images: DataFrame,
           maxDownloads: Int = 20): Map[String, DataFrame] = {
-    val (metadata0, files, chunks) = ingest(objects, images, maxDownloads)
-    val cleaned = clean(metadata0)
-    val (kept, victims) = dedup(cleaned)
-    val (keptFiles, keptChunks) =
-      deleteFiles(files, chunks, victims.select("gridfs_file_id"))
-    val (withLineage, tFiles, tChunks) = transform(kept, keptFiles, keptChunks)
-    val labeled = split(withLineage)
+    val kept = Relational.keepFirst(fetch(objects, images, maxDownloads),
+      Seq("objectID"), Seq(col("created_at"), col("__meta_id")))
+    val objectId = col("objectID").cast("long")
+    val (files, chunks) = Chunking.gridfsPut(rawBlobs(kept))             // K1
+    val (tFiles, tChunks) =
+      Chunking.gridfsPut(transformedBlobs(kept, objectId, col("bytes")))  // K5
+    val lineage = when(ImageOps.transformImage(col("bytes")).isNotNull,   // K6
+      transformedId(objectId))
     Map(
-      "artwork_metadata" -> labeled,
-      "fs_files" -> keptFiles, "fs_chunks" -> keptChunks,
+      "artwork_metadata" -> split(clean(metadataOf(kept, lineage))),
+      "fs_files" -> files, "fs_chunks" -> chunks,
       "fs_transformed_files" -> tFiles, "fs_transformed_chunks" -> tChunks)
   }
 }

@@ -30,6 +30,15 @@ object ApiSource {
     StructField("primaryImage", StringType),
     StructField("status", IntegerType, nullable = false)))
 
+  /** Explicit schema for the image fetch results `(url, bytes, status)`
+    * — the shape [[graft.sources.HttpFetcher]] emits. Reading parquet
+    * without it starts a schema-inference job every time a pipeline is
+    * built. */
+  val imagesSchema: StructType = StructType(Seq(
+    StructField("url", StringType),
+    StructField("bytes", BinaryType),
+    StructField("status", IntegerType)))
+
   def writeObjects(objects: DataFrame, dir: String): Unit =
     objects.write.mode("overwrite").json(s"$dir/objects")
 
@@ -40,5 +49,5 @@ object ApiSource {
     spark.read.schema(objectsSchema).json(s"$dir/objects")
 
   def readImages(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/images")
+    spark.read.schema(imagesSchema).parquet(s"$dir/images")
 }
